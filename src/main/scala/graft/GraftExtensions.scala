@@ -14,6 +14,11 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   * production packaging of what `NativeFunctions.register` does
   * per-session for the harness-owned sessions (the driver builds the
   * SparkSession, so queries cannot rely on session-construction hooks).
+  *
+  * It also installs [[graft.sources.ParquetFooters.ResolveParquetDirs]],
+  * which resolves `` parquet.`<dir>` `` from one driver-side footer instead
+  * of a schema-inference Spark job. It is a hint-resolution rule because
+  * Spark's own `ResolveSQLOnFile` runs before any custom resolution rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -22,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
+    ext.injectHintResolutionRule(new graft.sources.ParquetFooters.ResolveParquetDirs(_))
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim", classOf[CosineSimilarity]),

@@ -9,7 +9,7 @@ package graft
   * audit counts, per-generation invariant checks — and each one leaves
   * the executor pool idle while the driver round-trips job submission,
   * tiny-shuffle scheduling, and the parquet commit protocol. Measured at
-  * sf0.1 (ProbeR21, r21): the 14 staged admission writes cost ~4.5 s
+  * sf0.1 (round 21, OPTIMIZATION_r21.md): the 14 staged admission writes cost ~4.5 s
   * run sequentially (~0.32 s each) while the same queries run NO faster
   * on local[8] than local[32] — the cost is serialized per-action
   * latency, not compute. Submitting independent actions concurrently

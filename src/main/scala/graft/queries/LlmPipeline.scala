@@ -4294,7 +4294,7 @@ object LlmPipeline extends QueryPack {
     *    with/without the filters, BASELINE.md).
     *
     * Round 7 — PPJoin+'s suffix filter: measured and REFUSED
-    * (graft.SuffixProbe, numbers in BASELINE.md). On the clean sf0.1
+    * (round-7 measurement, numbers in BASELINE.md). On the clean sf0.1
     * corpus the verify stage holds large candidate slack (124,879
     * candidates → 256 qualifying pairs) but costs only 5–12% of
     * wall-clock — the candidate stage dominates, and the slack rows
@@ -6890,7 +6890,7 @@ object LlmPipeline extends QueryPack {
     val reps = res("reps")
     // The twelve invariant actions are independent read-only jobs over
     // the resolved chains; issued sequentially they serialize ~12 job
-    // round-trips per generation (r21 ProbeR21: 1.8-2.4 s/generation at
+    // round-trips per generation (OPTIMIZATION_r21.md: 1.8-2.4 s/generation at
     // sf0.1 with executors mostly idle). Par overlaps them (guide §2.6).
     graft.Par.forallPar(Seq(
       () => res("stats").select("ndl", "toktot").head() ==
@@ -7609,7 +7609,7 @@ object LlmPipeline extends QueryPack {
             ("pq_codes", U, () => cellsCodes._2))
       }
     // Independent delta writes to distinct paths — concurrent
-    // (guide §2.6; ProbeR21 measured the sequential loop at ~4.5 s of
+    // (guide §2.6; OPTIMIZATION_r21.md measured the sequential loop at ~4.5 s of
     // serialized job latency for well under 1 s of executor compute).
     val staged = graft.Par.run((textOuts ++ annOuts).map {
       case (p, k, mkDf) => () =>

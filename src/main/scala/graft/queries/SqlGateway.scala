@@ -8,20 +8,28 @@ import graft.sources.Tables
 /** SQL-string command surface (reference-direct: the replicated log's
   * payload is a SQL command string — /root/reference/src/raft/node.go:16-19
   * — applied in commit order to a SQL store). Here the "store" is the
-  * Spark session catalog: [[sql]] registers every fixture table as a view
-  * and routes the command through Spark SQL's full parser → Catalyst →
-  * Tungsten path, so an arbitrary textual SQL command is a first-class way
-  * to drive the engine — same plans, same pushdown, same codegen as the
-  * DataFrame surface.
+  * Spark session catalog: [[sql]] makes sure every fixture table is
+  * registered as a view and routes the command through Spark SQL's full
+  * parser → Catalyst → Tungsten path, so an arbitrary textual SQL command
+  * is a first-class way to drive the engine — same plans, same pushdown,
+  * same codegen as the DataFrame surface.
   *
   * Scale notes: views are lazy scans with explicit schemas (Tables), so a
   * SQL command gets identical partition pruning / filter pushdown to the
-  * declarative API; nothing about the string entry point costs anything
-  * at 100 TB.
+  * declarative API. The string entry point's fixed cost per command is the
+  * front end: parse, analysis, optimisation, planning and codegen. View
+  * registration is paid once per (session, dir), and in a session built
+  * with `GraftExtensions` a `` parquet.`<dir>` `` resolves from one footer
+  * on the driver, without a schema-inference Spark job.
   */
 object SqlGateway extends QueryPack {
 
-  /** Execute one SQL command string against the registered fixture views. */
+  /** Execute one SQL command string against the fixture views of `dir`.
+    * The views are registered on the first call for (session, dir); a
+    * later call re-registers only a view that an earlier command replaced
+    * or dropped ([[Tables.registerAll]]), so each command still sees the
+    * fixtures.
+    */
   def sql(spark: SparkSession, dir: String, cmd: String): DataFrame = {
     Tables.registerAll(spark, dir)
     spark.sql(cmd)

@@ -45,11 +45,15 @@ object Tables {
   /** Drop all memoized relations of one session (use after regenerating
     * a fixture dir in-process).
     */
-  def invalidate(spark: SparkSession): Unit =
+  def invalidate(spark: SparkSession): Unit = {
     relationCache.keySet.removeIf(_._1 eq spark)
+    installed.keySet.removeIf(_._1 eq spark)
+  }
 
-  private def purgeStopped(): Unit =
+  private def purgeStopped(): Unit = {
     relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    installed.keySet.removeIf(_._1.sparkContext.isStopped)
+  }
 
   private def memo(spark: SparkSession, dir: String, table: String)(
       build: => DataFrame): DataFrame = {
@@ -119,15 +123,15 @@ object Tables {
     *     codegen'd op per row, no double round-trip on ~1.7e18 ns
     *     epochs, truncation identical to DuckDB's cast.
     *
-    * The probe is a driver-side footer read (no data scan) and is
-    * memoized with the relation, so it costs one file-footer fetch per
-    * session — nothing at query time.
+    * The probe is one footer read on the driver ([[ParquetFooters.schemaOf]]:
+    * no data scan, no Spark job) and is memoized with the relation, so it
+    * costs one file-footer fetch per session — nothing at query time.
     */
   def events(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "events_shimmed") {
       import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
       val tsIsNativeTimestamp =
-        scala.util.Try(spark.read.parquet(path(dir, "events")).schema("ts").dataType)
+        scala.util.Try(ParquetFooters.schemaOf(spark, path(dir, "events"))("ts").dataType)
           .toOption
           .exists(dt => dt == TimestampType || dt == TimestampNTZType)
       if (tsIsNativeTimestamp)
@@ -143,21 +147,43 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, "embeddings", Schemas.embeddings)
 
+  private val fixtures: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "lineitem" -> lineitem, "orders" -> orders, "customer" -> customer,
+    "supplier" -> supplier, "part" -> part, "nation" -> nation,
+    "region" -> region, "events" -> events, "documents" -> documents,
+    "embeddings" -> embeddings)
+
+  /** The temp-view objects [[registerAll]] installed, per (session, dir):
+    * a view whose catalog entry is still, by reference, the installed one
+    * needs no re-registration.
+    */
+  private val installed =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[String, AnyRef]]()
+
   /** Register every fixture table as a temp view — the catalog surface
     * behind the SQL-string command entry (queries.SqlGateway). Views stay
     * lazy scans, so pushdown/pruning through `spark.sql(...)` is
     * identical to the DataFrame path.
+    *
+    * Registers once per (session, dir): a later call re-registers only the
+    * views whose raw catalog entry (`getRawTempView`) is no longer the
+    * object this method installed — a command replaced or dropped it, or a
+    * call for another dir took the name. A repeated call therefore costs
+    * ten catalog lookups, not ten `createOrReplaceTempView`s, and still
+    * hands every command the fixture views. [[invalidate]] forces a full
+    * re-registration over rebuilt relations.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    orders(spark, dir).createOrReplaceTempView("orders")
-    customer(spark, dir).createOrReplaceTempView("customer")
-    supplier(spark, dir).createOrReplaceTempView("supplier")
-    part(spark, dir).createOrReplaceTempView("part")
-    nation(spark, dir).createOrReplaceTempView("nation")
-    region(spark, dir).createOrReplaceTempView("region")
-    events(spark, dir).createOrReplaceTempView("events")
-    documents(spark, dir).createOrReplaceTempView("documents")
-    embeddings(spark, dir).createOrReplaceTempView("embeddings")
+    purgeStopped()
+    val catalog = spark.sessionState.catalog
+    val key = (spark, dir)
+    val mine = installed.getOrDefault(key, Map.empty)
+    val stale = fixtures.filterNot { case (name, _) =>
+      mine.get(name).exists(v => catalog.getRawTempView(name).exists(_ eq v))
+    }
+    if (stale.nonEmpty) {
+      stale.foreach { case (name, load) => load(spark, dir).createOrReplaceTempView(name) }
+      installed.put(key, mine ++ stale.map { case (name, _) => name -> catalog.getRawTempView(name).get })
+    }
   }
 }
