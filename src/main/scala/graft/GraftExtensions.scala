@@ -19,6 +19,12 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   * which resolves `` parquet.`<dir>` `` from one driver-side footer instead
   * of a schema-inference Spark job. It is a hint-resolution rule because
   * Spark's own `ResolveSQLOnFile` runs before any custom resolution rule.
+  *
+  * And it installs [[graft.plans.HoistLiterals]], a columnar rule whose
+  * post-transition hook is the last step before whole-stage codegen: a
+  * command that differs from an earlier one only in the literals of its
+  * comparisons and arithmetic reuses the earlier command's compiled
+  * classes instead of compiling new ones.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -28,6 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
     ext.injectHintResolutionRule(new graft.sources.ParquetFooters.ResolveParquetDirs(_))
+    ext.injectColumnar(_ => graft.plans.HoistLiterals)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim", classOf[CosineSimilarity]),

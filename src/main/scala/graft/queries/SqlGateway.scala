@@ -20,7 +20,11 @@ import graft.sources.Tables
   * front end: parse, analysis, optimisation, planning and codegen. View
   * registration is paid once per (session, dir), and in a session built
   * with `GraftExtensions` a `` parquet.`<dir>` `` resolves from one footer
-  * on the driver, without a schema-inference Spark job.
+  * on the driver, without a schema-inference Spark job. In such a session
+  * codegen, too, is paid once per command shape rather than per command:
+  * a command that differs from an earlier one only in the literals of its
+  * comparisons and arithmetic reuses the earlier command's compiled
+  * classes ([[graft.plans.HoistLiterals]]).
   */
 object SqlGateway extends QueryPack {
 
@@ -745,14 +749,16 @@ object SqlGateway extends QueryPack {
     * under WRITER-UNIQUE names before the CAS, so the contended object
     * is only the one commit file, never the data write.
     */
-  private[graft] def occCurrentGen(logDir: java.nio.file.Path): Long = {
-    val names = scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
+  private[graft] def occCurrentGen(logDir: java.nio.file.Path): Long =
+    commitGens(logDir).foldLeft(0L)(math.max)
+
+  /** Generations of the commit files the log directory lists now. */
+  private def commitGens(logDir: java.nio.file.Path): Seq[Long] =
+    scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).toList
+      s.iterator().asScala.map(_.getFileName.toString)
+        .collect { case n if n.startsWith("commit-") => n.stripPrefix("commit-").toLong }.toList
     }
-    names.collect { case n if n.startsWith("commit-") => n.stripPrefix("commit-").toLong }
-      .foldLeft(0L)(math.max)
-  }
 
   /** Resolve the table name committed as generation `gen`. */
   private[graft] def occTableAt(logDir: java.nio.file.Path, gen: Long): String =
@@ -906,14 +912,8 @@ object SqlGateway extends QueryPack {
   /** Generation of the earliest manifest still on the log — after a
     * vacuum this is the retention point; reads below it fail closed.
     */
-  private[graft] def occEarliestGen(logDir: java.nio.file.Path): Long = {
-    val names = scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).toList
-    }
-    names.collect { case n if n.startsWith("commit-") => n.stripPrefix("commit-").toLong }
-      .minOption.getOrElse(0L)
-  }
+  private[graft] def occEarliestGen(logDir: java.nio.file.Path): Long =
+    commitGens(logDir).minOption.getOrElse(0L)
 
   /** [[occManifestAt]] with the q171 fail-closed error contract on the
     * retention axis: resolving a generation the vacuum expired throws,
@@ -957,27 +957,24 @@ object SqlGateway extends QueryPack {
   private[graft] def vacuumManifestLog(
       logDir: java.nio.file.Path, planesRoot: java.nio.file.Path,
       retainFrom: Long): (Long, Long) = {
-    val cur = occCurrentGen(logDir)
+    val gens = commitGens(logDir)
+    val cur = gens.foldLeft(0L)(math.max)
     require(retainFrom <= cur,
       s"retention point $retainFrom is past the current generation $cur")
     // Chain-aware (r19): a binding value may be a delta CHAIN
     // ([[PlaneChains]]); EVERY generation it names — base, deltas,
     // tombstones, overrides — is live for that manifest's readers and
     // must be retained. Parsing only the first path would let the
-    // vacuum delete a retained chain's delta generations.
-    val retained = (math.max(0L, retainFrom) to cur).flatMap(g =>
+    // vacuum delete a retained chain's delta generations. Only listed
+    // manifests are read: an earlier vacuum may have expired those
+    // below a retention point higher than this one.
+    val retained = gens.filter(_ >= retainFrom).flatMap(g =>
       occManifestAt(logDir, g).values.flatMap(v =>
         PlaneChains.paths(v).map(p =>
           java.nio.file.Paths.get(p).toAbsolutePath.normalize))).toSet
-    val gens = scala.util.Using.resource(java.nio.file.Files.list(logDir)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).toList
-    }.collect { case n if n.startsWith("commit-") => n.stripPrefix("commit-").toLong }
-    var expired = 0L
-    gens.filter(_ < retainFrom).sorted.foreach { g =>
-      java.nio.file.Files.delete(logDir.resolve(f"commit-$g%06d"))
-      expired += 1
-    }
+    val expiring = gens.filter(_ < retainFrom).sorted
+    expiring.foreach(g => java.nio.file.Files.delete(logDir.resolve(f"commit-$g%06d")))
+    val expired = expiring.size.toLong
     var orphans = 0L
     if (java.nio.file.Files.isDirectory(planesRoot)) {
       val planes = scala.util.Using.resource(java.nio.file.Files.list(planesRoot)) { s =>

@@ -28,25 +28,7 @@ class GatewayFrontEndSpec extends SparkSpec {
   private val fixtureViews = Seq("lineitem", "orders", "customer", "supplier", "part",
     "nation", "region", "events", "documents", "embeddings")
 
-  private lazy val ext: SparkSession = {
-    val shared = spark
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s ne shared, "expected a fresh session honoring withExtensions")
-      s
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-  }
+  private lazy val ext: SparkSession = siblingSession(new GraftExtensions)
 
   private def rawViews(s: SparkSession): Seq[AnyRef] =
     fixtureViews.map(v => s.sessionState.catalog.getRawTempView(v).orNull)

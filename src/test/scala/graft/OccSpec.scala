@@ -1240,4 +1240,20 @@ class OccSpec extends SparkSpec {
       assert(SqlGateway.occTableAt(logDir, 1L) == "t1")
     } finally LlmPipeline.deleteRecursively(logDir)
   }
+
+  test("a vacuum below an earlier vacuum's retention point reads only the manifests still on the log") {
+    val logDir = Files.createTempDirectory("graft-occ-vacuum-log-")
+    val planesRoot = Files.createTempDirectory("graft-occ-vacuum-planes-")
+    def gen(g: Long): String =
+      Files.createDirectories(planesRoot.resolve("bal").resolve(s"gen-$g")).toString
+    try {
+      (0L to 3L).foreach(g => assert(SqlGateway.occTryCommitManifest(logDir, g - 1, Seq("bal" -> gen(g)))))
+      assert(SqlGateway.vacuumManifestLog(logDir, planesRoot, 2L) == ((2L, 2L)))
+      assert(SqlGateway.occTryCommitManifest(logDir, 3L, Seq("bal" -> gen(4L))))
+      assert(SqlGateway.vacuumManifestLog(logDir, planesRoot, 0L) == ((0L, 0L)))
+      assert(SqlGateway.occEarliestGen(logDir) == 2L && SqlGateway.occCurrentGen(logDir) == 4L)
+      (2L to 4L).foreach(g => SqlGateway.occManifestAt(logDir, g).values.foreach(p =>
+        assert(Files.exists(java.nio.file.Paths.get(p)), s"vacuum deleted a retained binding: $p")))
+    } finally Seq(logDir, planesRoot).foreach(LlmPipeline.deleteRecursively)
+  }
 }

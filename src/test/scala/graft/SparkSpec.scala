@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -22,6 +22,26 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfSmoke
+
+  /** A fresh session on the shared SparkContext, built with `install`'s
+    * extensions; the shared session stays the default and active one, so
+    * it remains the extension-free reference for the other suites.
+    */
+  protected def siblingSession(install: SparkSessionExtensions => Unit): SparkSession = {
+    val shared = spark
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder().withExtensions(install).getOrCreate()
+      assert(s ne shared, "expected a fresh session honoring withExtensions")
+      s
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
 
   /** Recursive directory copy — crash-simulation helper: snapshot a
     * generation directory aside so a test can restore it after a
