@@ -25,6 +25,12 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   * command that differs from an earlier one only in the literals of its
   * comparisons and arithmetic reuses the earlier command's compiled
   * classes instead of compiling new ones.
+  *
+  * And it installs [[graft.plans.ElideSingleSplitShuffles]], a query-stage
+  * preparation rule: in adaptive planning, a shuffle that would move the
+  * rows of one file split into one partition becomes a local
+  * `CoalesceExec(1)`, so a read over a single small file runs as one job
+  * instead of a map stage, a re-plan and a result stage.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -35,6 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
     ext.injectHintResolutionRule(new graft.sources.ParquetFooters.ResolveParquetDirs(_))
     ext.injectColumnar(_ => graft.plans.HoistLiterals)
+    ext.injectQueryStagePrepRule(_ => graft.plans.ElideSingleSplitShuffles)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim", classOf[CosineSimilarity]),

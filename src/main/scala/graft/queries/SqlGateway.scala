@@ -24,7 +24,10 @@ import graft.sources.Tables
   * codegen, too, is paid once per command shape rather than per command:
   * a command that differs from an earlier one only in the literals of its
   * comparisons and arithmetic reuses the earlier command's compiled
-  * classes ([[graft.plans.HoistLiterals]]).
+  * classes ([[graft.plans.HoistLiterals]]). And Spark's second job is gone
+  * from reads of one small file: a shuffle that would only move one
+  * split's rows into one partition runs as a local coalesce
+  * ([[graft.plans.ElideSingleSplitShuffles]]), so such a read is one stage.
   */
 object SqlGateway extends QueryPack {
 
@@ -886,28 +889,41 @@ object SqlGateway extends QueryPack {
     * current generation is named by ONE atomically-created file, so a
     * reader that resolves all its tables from one manifest can never
     * observe table A's new generation beside table B's old one.
+    * A non-empty line without `=` fails closed, naming the commit file
+    * and the line.
     */
   private[graft] def occManifestAt(
-      logDir: java.nio.file.Path, gen: Long): Map[String, String] =
-    new String(java.nio.file.Files.readAllBytes(
-      logDir.resolve(f"commit-$gen%06d")), java.nio.charset.StandardCharsets.UTF_8)
+      logDir: java.nio.file.Path, gen: Long): Map[String, String] = {
+    val file = logDir.resolve(f"commit-$gen%06d")
+    new String(java.nio.file.Files.readAllBytes(file), java.nio.charset.StandardCharsets.UTF_8)
       .split("\n").iterator.filter(_.nonEmpty).map { l =>
         val i = l.indexOf('=')
+        if (i < 0) throw new IllegalStateException(s"manifest $file has a line without '=': '$l'")
         (l.substring(0, i), l.substring(i + 1))
       }.toMap
+  }
 
   /** CAS-commit a manifest binding every logical table at once — the
     * same O_CREAT|O_EXCL race as [[occTryCommit]], so N tables cost
     * exactly one contended object. A transaction that rewrote only
     * SOME tables must still re-bind the others (carrying forward the
     * base manifest's pointers) — the manifest is total by contract.
+    * A binding that would not read back as itself (a key holding `=` or
+    * a newline, a value holding a newline) is rejected before the CAS.
     */
   private[graft] def occTryCommitManifest(
       logDir: java.nio.file.Path, expectedGen: Long,
-      bindings: Seq[(String, String)]): Boolean =
+      bindings: Seq[(String, String)]): Boolean = {
+    bindings.foreach { case (k, v) =>
+      require(!k.contains('=') && !k.contains('\n') && !v.contains('\n'),
+        s"manifest binding '${k.replace("\n", "\\n")}' -> '${v.replace("\n", "\\n")}' " +
+          "would not read back as written: " +
+          "a key may hold neither '=' nor a newline, a value no newline")
+    }
     casCreateFile(logDir.resolve(f"commit-${expectedGen + 1}%06d"),
       bindings.map { case (k, v) => s"$k=$v" }.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
 
   /** Generation of the earliest manifest still on the log — after a
     * vacuum this is the retention point; reads below it fail closed.

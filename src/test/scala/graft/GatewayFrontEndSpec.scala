@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
@@ -63,27 +60,6 @@ class GatewayFrontEndSpec extends SparkSpec {
     try body finally Seq(ext, spark).foreach(_.conf.unset(key))
   }
 
-  /** Spark jobs launched by `body` on this thread, counted once the
-    * listener bus has drained. */
-  private def jobsDuring(body: => Unit): Int = {
-    val key = "graft.test.frontend"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == "on") jobs.incrementAndGet()
-    }
-    val sc = ext.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, "on")
-    try body
-    finally {
-      sc.setLocalProperty(key, null)
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   test("fixture views are registered once: the raw view objects survive a second command") {
     SqlGateway.sql(ext, sfDir, "SELECT 1").collect()
     val first = rawViews(ext)
@@ -124,7 +100,7 @@ class GatewayFrontEndSpec extends SparkSpec {
     writeDir(dir, "SELECT id AS k, id * 3 AS v FROM range(100)")
     val sql = s"SELECT count(*) AS n, sum(v) AS s FROM parquet.`$dir` WHERE k % 7 = 3"
     var analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-    val jobs = jobsDuring { analyzed = ext.sql(sql).queryExecution.analyzed }
+    val jobs = jobsDuring(ext) { analyzed = ext.sql(sql).queryExecution.analyzed }
     assert(jobs == 0, s"analysis launched $jobs Spark job(s)")
     assert(analyzed.collectFirst { case r: LogicalRelation => r }.isDefined)
     assertAsSpark(sql)

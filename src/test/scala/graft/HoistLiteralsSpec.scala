@@ -30,11 +30,6 @@ class HoistLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  private def withConf[T](sessions: Seq[SparkSession], kvs: (String, String)*)(body: => T): T = {
-    sessions.foreach(s => kvs.foreach { case (k, v) => s.conf.set(k, v) })
-    try body finally sessions.foreach(s => kvs.foreach { case (k, _) => s.conf.unset(k) })
-  }
-
   /** Rows as a sorted multiset, or the error conditions of the failure's
     * cause chain. */
   private def outcome(s: SparkSession, sql: String): Either[List[String], Seq[String]] =

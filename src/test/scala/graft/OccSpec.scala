@@ -1256,4 +1256,31 @@ class OccSpec extends SparkSpec {
         assert(Files.exists(java.nio.file.Paths.get(p)), s"vacuum deleted a retained binding: $p")))
     } finally Seq(logDir, planesRoot).foreach(LlmPipeline.deleteRecursively)
   }
+
+  test("a manifest line without '=' fails closed, naming the commit file and the line") {
+    val logDir = Files.createTempDirectory("graft-occ-codec-read-")
+    try {
+      Files.write(logDir.resolve("commit-000000"),
+        "bal=/planes/bal/gen-0\nstock /planes/stock/gen-0\n".getBytes("UTF-8"))
+      val bad = intercept[IllegalStateException](SqlGateway.occManifestAt(logDir, 0L))
+      assert(bad.getMessage.contains("commit-000000") && bad.getMessage.contains("stock /planes/stock/gen-0"),
+        bad.getMessage)
+    } finally LlmPipeline.deleteRecursively(logDir)
+  }
+
+  test("a binding that would not read back as written is refused before the CAS") {
+    val logDir = Files.createTempDirectory("graft-occ-codec-write-")
+    try {
+      assert(SqlGateway.occTryCommitManifest(logDir, -1L, Seq("bal" -> "/planes/bal/gen-0")))
+      Seq("a=b" -> "/p", "a\nb" -> "/p", "a" -> "/p\nc=/q").foreach { binding =>
+        val refused = intercept[IllegalArgumentException](
+          SqlGateway.occTryCommitManifest(logDir, 0L, Seq("bal" -> "/planes/bal/gen-1", binding)))
+        assert(refused.getMessage.contains(binding._1.replace("\n", "\\n")), refused.getMessage)
+        assert(SqlGateway.occCurrentGen(logDir) == 0L, s"$binding was committed")
+      }
+      val kept = Seq("bal" -> "/planes/bal/gen-1", "stock" -> "/p=q", "" -> "")
+      assert(SqlGateway.occTryCommitManifest(logDir, 0L, kept))
+      assert(SqlGateway.occManifestAt(logDir, 1L) == kept.toMap)
+    } finally LlmPipeline.deleteRecursively(logDir)
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,6 +45,33 @@ abstract class SparkSpec extends AnyFunSuite {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  /** Run `body` with `kvs` set in each of `sessions`, unsetting them after. */
+  protected def withConf[T](sessions: Seq[SparkSession], kvs: (String, String)*)(body: => T): T = {
+    sessions.foreach(s => kvs.foreach { case (k, v) => s.conf.set(k, v) })
+    try body finally sessions.foreach(s => kvs.foreach { case (k, _) => s.conf.unset(k) })
+  }
+
+  /** Spark jobs launched by `body` on this thread in `s`'s context,
+    * counted once the listener bus has drained. */
+  protected def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val key = "graft.test.jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == "on") jobs.incrementAndGet()
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "on")
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   /** Recursive directory copy — crash-simulation helper: snapshot a
