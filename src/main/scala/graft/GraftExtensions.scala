@@ -31,6 +31,14 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   * rows of one file split into one partition becomes a local
   * `CoalesceExec(1)`, so a read over a single small file runs as one job
   * instead of a map stage, a re-plan and a result stage.
+  *
+  * And it installs [[graft.plans.FreshParquetDirWrites]], a planner
+  * strategy: an unpartitioned, unbucketed parquet path write into a
+  * directory that does not exist yet runs as one job that broadcasts the
+  * Hadoop conf once (Spark's writer ships it twice in every task) and
+  * commits on the driver by renaming hidden attempt files, without
+  * Spark's `_temporary` tree. Every other write, and any write into an
+  * existing path, runs Spark's own command.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -39,6 +47,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.FreshParquetDirWrites)
     ext.injectHintResolutionRule(new graft.sources.ParquetFooters.ResolveParquetDirs(_))
     ext.injectColumnar(_ => graft.plans.HoistLiterals)
     ext.injectQueryStagePrepRule(_ => graft.plans.ElideSingleSplitShuffles)

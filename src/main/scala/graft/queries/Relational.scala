@@ -209,9 +209,10 @@ object Relational extends QueryPack {
     * acctbal DESC, custkey breaks ties).
     */
   def ruleRewrittenTopK(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"),
-        s"graft_rel_ruletopk_${SourcesOps.sanitizedAppId(spark)}").toString
+    // A directory per call: the returned frame reads it lazily, so a later
+    // call, in this session or another on the same context, must not
+    // overwrite it.
+    val out = java.nio.file.Files.createTempDirectory("graft_rel_ruletopk_").resolve("out").toString
     val exp = spark.experimental
     exp.synchronized {
       if (!exp.extraStrategies.exists(_.isInstanceOf[graft.plans.TopKPerGroupStrategy]))
@@ -227,7 +228,7 @@ object Relational extends QueryPack {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .drop("rn")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+        .write.parquet(out)
     } finally exp.synchronized {
       exp.extraOptimizations =
         exp.extraOptimizations.filterNot(_ eq graft.plans.RankFilterToTopK)

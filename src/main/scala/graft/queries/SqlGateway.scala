@@ -28,6 +28,14 @@ import graft.sources.Tables
   * from reads of one small file: a shuffle that would only move one
   * split's rows into one partition runs as a local coalesce
   * ([[graft.plans.ElideSingleSplitShuffles]]), so such a read is one stage.
+  *
+  * On the write side, a command's fixed cost is Spark's file commit. A
+  * parquet write into a directory that does not exist yet, which is how
+  * the commit log stages every generation, runs in such a session as one
+  * job that ships the Hadoop conf once as a broadcast and commits by
+  * renaming hidden attempt files in place, without the `_temporary` tree
+  * ([[graft.plans.FreshParquetDirWrites]]); its files are Spark's, byte
+  * for byte.
   */
 object SqlGateway extends QueryPack {
 

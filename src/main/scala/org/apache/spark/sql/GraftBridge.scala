@@ -1,13 +1,21 @@
 package org.apache.spark.sql
 
+import java.util.Date
+
+import org.apache.spark.internal.io.{FileCommitProtocol, SparkHadoopWriterUtils}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BaseOrdering, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobDescription, WriteTaskResult}
+import org.apache.spark.sql.util.SchemaUtils
 
-/** Minimal bridge into `private[sql]` surface needed by graft's custom
-  * operator (graft.plans.TopKPerGroup): constructing a DataFrame from a
-  * custom logical plan, and building a row ordering from SortOrder. This
-  * is the standard extension-library pattern (same technique as Sedona /
-  * Delta et al.) — kept to exactly two forwarders.
+/** Minimal bridge into the `private[sql]`/`private[spark]` surface graft's
+  * custom operators need: constructing a DataFrame from a custom logical
+  * plan and building a row ordering from SortOrder
+  * (graft.plans.TopKPerGroup), and Spark's one-task file writer with the
+  * checks and ids around it (graft.plans.FreshParquetDirWrites). This is
+  * the standard extension-library pattern (same technique as Sedona /
+  * Delta et al.) — forwarders only.
   */
 object GraftBridge {
 
@@ -16,4 +24,20 @@ object GraftBridge {
 
   def createOrdering(order: Seq[SortOrder], schema: Seq[Attribute]): BaseOrdering =
     RowOrdering.create(order, schema)
+
+  def executeWriteTask(
+      description: WriteJobDescription,
+      jobTrackerId: String,
+      stageId: Int,
+      partitionId: Int,
+      attemptNumber: Int,
+      committer: FileCommitProtocol,
+      rows: Iterator[InternalRow]): WriteTaskResult =
+    FileFormatWriter.executeTask(description, jobTrackerId, stageId, partitionId, attemptNumber,
+      committer, rows, None)
+
+  def newJobTrackerId(): String = SparkHadoopWriterUtils.createJobTrackerID(new Date())
+
+  def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
+    SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
 }

@@ -68,4 +68,12 @@ class RuleRewriteSpec extends SparkSpec {
         "rule must not fire for rank(), whose tie semantics differ")
     }
   }
+
+  test("q120 frames built in two sessions on one context both read their own output") {
+    val q120 = graft.queries.Relational.all.find(_.name.startsWith("q120")).get
+    val first = q120.fn(spark, sfDir)
+    val other = siblingSession(_ => ())
+    val second = q120.fn(other, sfDir).collect().map(_.toString).toSeq
+    assert(first.collect().map(_.toString).toSeq == second)
+  }
 }
