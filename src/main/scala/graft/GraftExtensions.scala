@@ -28,9 +28,18 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   *
   * And it installs [[graft.plans.ElideSingleSplitShuffles]], a query-stage
   * preparation rule: in adaptive planning, a shuffle that would move the
-  * rows of one file split into one partition becomes a local
-  * `CoalesceExec(1)`, so a read over a single small file runs as one job
-  * instead of a map stage, a re-plan and a result stage.
+  * rows of one file split, or of a finished shuffle stage that adaptive
+  * coalescing reads as one partition, into one partition becomes a local
+  * `CoalesceExec(1)`. A read over a single small file runs as one job
+  * instead of a map stage, a re-plan and a result stage, and the
+  * `ORDER BY` over a small `GROUP BY` result sorts in place instead of
+  * sampling and shuffling it.
+  *
+  * And it installs [[graft.plans.RowGroupBalancedSplits]], another
+  * query-stage preparation rule: a parquet scan of one file that Spark
+  * cuts into several splits keeps their number, but the cuts move to
+  * row-group starts (read from the file's footer on the driver), so each
+  * task reads an equal share of the rows and the tasks finish together.
   *
   * And it installs [[graft.plans.FreshParquetDirWrites]], a planner
   * strategy: an unpartitioned, unbucketed parquet path write into a
@@ -50,7 +59,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.FreshParquetDirWrites)
     ext.injectHintResolutionRule(new graft.sources.ParquetFooters.ResolveParquetDirs(_))
     ext.injectColumnar(_ => graft.plans.HoistLiterals)
-    ext.injectQueryStagePrepRule(_ => graft.plans.ElideSingleSplitShuffles)
+    ext.injectQueryStagePrepRule(graft.plans.ElideSingleSplitShuffles(_))
+    ext.injectQueryStagePrepRule(_ => graft.plans.RowGroupBalancedSplits)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim", classOf[CosineSimilarity]),

@@ -1,11 +1,12 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, ProjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{CoalesceShufflePartitions, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
@@ -27,18 +28,27 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   *  - its child provably runs as one partition: through projections,
   *    filters, aggregates, local sorts, `TopKPerGroupExec`, earlier
   *    `CoalesceExec(1)`s and broadcast hash joins' streamed sides down to
-  *    a non-bucketed, unpartitioned file scan of exactly one file no
-  *    larger than `FilePartition.maxSplitBytes` for its listing.
+  *    either a non-bucketed, unpartitioned file scan of exactly one file
+  *    no larger than `FilePartition.maxSplitBytes` for its listing, or a
+  *    materialized shuffle stage that adaptive execution's own coalescing
+  *    (`CoalesceShufflePartitions` under `session`'s settings) reads as
+  *    one partition.
+  *
+  * The second leaf is what a re-optimisation sees once a map stage has
+  * run: the range shuffle of an `ORDER BY` over the tiny result of a
+  * `GROUP BY` then costs a sampling job, a map stage and a re-plan, to
+  * sort rows that are read as one partition anyway. With coalescing off,
+  * or a stage it reads as several partitions, the shuffle stays.
   *
   * `CoalesceExec(1)` outputs `SinglePartition` whatever its input, so
   * under the spine condition a wrong guess in the last test costs
-  * parallelism, never an answer; the work moved into the scan's task is
-  * bounded by one split. `GraftExtensions` installs the rule through
-  * `injectQueryStagePrepRule`, so it runs after `EnsureRequirements` in
-  * adaptive planning, at the start and at every re-optimisation;
-  * non-adaptive plans are not touched.
+  * parallelism, never an answer; the work moved into one task is bounded
+  * by one split or by one coalesced shuffle partition. `GraftExtensions`
+  * installs the rule through `injectQueryStagePrepRule`, so it runs after
+  * `EnsureRequirements` in adaptive planning, at the start and at every
+  * re-optimisation; non-adaptive plans are not touched.
   */
-object ElideSingleSplitShuffles extends Rule[SparkPlan] {
+case class ElideSingleSplitShuffles(session: SparkSession) extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = elide(plan, onSpine = true)
 
@@ -60,11 +70,10 @@ object ElideSingleSplitShuffles extends Rule[SparkPlan] {
     case CoalesceExec(1, child) => oneSplit(child)
     case j: BroadcastHashJoinExec => oneSplit(if (j.buildSide == BuildRight) j.left else j.right)
     case scan: FileSourceScanExec =>
-      !scan.bucketedScan && scan.relation.partitionSchema.isEmpty && {
-        val listing = scan.selectedPartitions
-        listing.totalNumberOfFiles == 1 &&
-          listing.totalFileSize <= FilePartition.maxSplitBytes(scan.relation.sparkSession, listing)
-      }
+      RowGroupBalancedSplits.singleFile(scan).exists { case (size, split) => size <= split }
+    case stage: ShuffleQueryStageExec =>
+      stage.isMaterialized &&
+        CoalesceShufflePartitions(session)(stage).outputPartitioning.numPartitions == 1
     case _ => false
   }
 }

@@ -286,11 +286,7 @@ object Joins extends QueryPack {
     * l_quantity, which is order-independent in doubles.
     */
   def bloomFilteredJoin(spark: SparkSession, dir: String): DataFrame = {
-    // App-id-suffixed scratch path: two concurrent runs / forked test
-    // JVMs on one machine must not clobber each other's output mid-read.
-    val out = java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"),
-        s"graft_join_bloom_${SourcesOps.sanitizedAppId(spark)}").toString
+    val out = SourcesOps.freshScratch("join_bloom")
     val conf = spark.conf
     val overrides = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
@@ -338,9 +334,7 @@ object Joins extends QueryPack {
     * strategies (SkewJoinSpec asserts it).
     */
   def skewSplitJoin(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Paths
-      .get(sys.props("java.io.tmpdir"),
-        s"graft_join_skewsplit_${SourcesOps.sanitizedAppId(spark)}").toString
+    val out = SourcesOps.freshScratch("join_skewsplit")
     val conf = spark.conf
     val overrides = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

@@ -209,10 +209,7 @@ object Relational extends QueryPack {
     * acctbal DESC, custkey breaks ties).
     */
   def ruleRewrittenTopK(spark: SparkSession, dir: String): DataFrame = {
-    // A directory per call: the returned frame reads it lazily, so a later
-    // call, in this session or another on the same context, must not
-    // overwrite it.
-    val out = java.nio.file.Files.createTempDirectory("graft_rel_ruletopk_").resolve("out").toString
+    val out = SourcesOps.freshScratch("rel_ruletopk")
     val exp = spark.experimental
     exp.synchronized {
       if (!exp.extraStrategies.exists(_.isInstanceOf[graft.plans.TopKPerGroupStrategy]))

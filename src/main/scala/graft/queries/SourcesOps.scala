@@ -36,6 +36,14 @@ object SourcesOps extends QueryPack {
     Paths.get(sys.props("java.io.tmpdir"),
       s"graft_srcops_${name}_${sanitizedAppId(spark)}").toString
 
+  /** A new directory per call under `java.io.tmpdir`, for a query that
+    * writes its result and returns a frame reading it lazily: a later
+    * call, in this session or another on the same context, must not
+    * overwrite what an earlier frame still reads.
+    */
+  private[graft] def freshScratch(name: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_${name}_").resolve("out").toString
+
   private[graft] def sanitizedAppId(spark: SparkSession): String =
     spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
 
@@ -44,7 +52,7 @@ object SourcesOps extends QueryPack {
     * the original parquet.
     */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "csv")
+    val out = freshScratch("srcops_csv")
     Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(out)
@@ -66,7 +74,7 @@ object SourcesOps extends QueryPack {
 
   /** JSON-lines round-trip over a documents projection. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "json")
+    val out = freshScratch("srcops_json")
     Tables.documents(spark, dir)
       .select("doc_id", "lang", "n_chars")
       .write.mode(SaveMode.Overwrite).json(out)
@@ -90,7 +98,7 @@ object SourcesOps extends QueryPack {
     * CSV/JSON (ORC support is built into spark-sql).
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "orc")
+    val out = freshScratch("srcops_orc")
     Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_returnflag", "l_quantity")
       .write.mode(SaveMode.Overwrite).orc(out)

@@ -1,11 +1,12 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -17,11 +18,12 @@ import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** Driver-side parquet schema reads: the schema Spark's non-merging
+/** Driver-side parquet footer reads: the schema Spark's non-merging
   * inference (`ParquetUtils.inferSchema` with `mergeSchema` off) would
   * infer, read from the same single footer, but without the Spark job
   * `SchemaMergeUtils.mergeSchemasInParallel` launches for every inference,
-  * even a one-file one.
+  * even a one-file one; and the row-group layout of one file, for cutting
+  * its scan into splits of equal row counts.
   */
 object ParquetFooters {
 
@@ -73,6 +75,14 @@ object ParquetFooters {
       HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
   }
+
+  /** The row groups of the parquet file at `path`, in file order: each
+    * one's starting offset (its first column chunk's first page, the
+    * offset parquet's split filter measures from) and its row count.
+    */
+  def rowGroups(hadoopConf: Configuration, path: Path): Seq[(Long, Long)] =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, hadoopConf), NO_FILTER)
+      .getBlocks.asScala.map(b => (b.getStartingPos, b.getRowCount)).sortBy(_._1).toSeq
 
   /** The schema of the parquet data at `path`, a file or a directory of
     * files, read from the one footer non-merging inference would pick.

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS, REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec, ShuffleOrigin}
@@ -26,7 +27,7 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
 
   private lazy val ext: SparkSession = siblingSession(new GraftExtensions)
   private lazy val eliding: SparkSession =
-    siblingSession(_.injectQueryStagePrepRule(_ => ElideSingleSplitShuffles))
+    siblingSession(_.injectQueryStagePrepRule(ElideSingleSplitShuffles(_)))
 
   private lazy val scratch: Path = Files.createTempDirectory("elide-single-split")
 
@@ -135,6 +136,65 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
       ENSURE_REQUIREMENTS)
   }
 
+  // --- a range shuffle over a finished stage that coalescing reads as one partition ---
+
+  /** Run `body` with a split size at which Spark cuts the one-file `bal` plane in two. */
+  private def withTwoSplits[T](body: => T): T = {
+    val size = new java.io.File(planes._1).listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    withConf(Seq(eliding, spark), "spark.sql.files.maxPartitionBytes" -> (size * 2 / 3).toString)(body)
+  }
+
+  private def groupedOrdered(groups: Int): String =
+    s"SELECT k % $groups AS g, count(*) AS n, sum(v) AS s FROM parquet.`${planes._1}` GROUP BY k % $groups ORDER BY g"
+
+  private def rangeShuffles(df: DataFrame): Int =
+    collect(plan(df)) { case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[RangePartitioning] => s }.size
+
+  /** `sql` run in `s`: the executed frame, its ordered rows and the jobs
+    * its execution ran (analysis, which infers the plane's schema in a
+    * job of its own here, comes first). */
+  private def ordered(s: SparkSession, sql: String): (DataFrame, Seq[String], Int) = {
+    val df = s.sql(sql)
+    var rows: Seq[String] = Nil
+    val jobs = jobsDuring(s) { rows = df.collect().map(_.toString).toSeq }
+    (df, rows, jobs)
+  }
+
+  test("a GROUP BY ... ORDER BY over a two-split file runs 2 jobs instead of 4, with the same ordered rows") {
+    withTwoSplits {
+      val (ours, oursRows, oursJobs) = ordered(eliding, groupedOrdered(7))
+      val (theirs, theirsRows, theirsJobs) = ordered(spark, groupedOrdered(7))
+      assert(rangeShuffles(ours) == 0 && rangeShuffles(theirs) == 1, s"range shuffle kept:\n${plan(ours)}")
+      assert(shuffles(ours) == Seq(ENSURE_REQUIREMENTS), s"the aggregate's shuffle is gone:\n${plan(ours)}")
+      assert(oursJobs == 2 && theirsJobs == 4, s"$oursJobs jobs against Spark's $theirsJobs")
+      assert(oursRows == theirsRows && oursRows.size == 7)
+    }
+  }
+
+  test("with partition coalescing off, or a stage it reads as several partitions, the range shuffle stays") {
+    withTwoSplits {
+      Seq(
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1").foreach { kv =>
+        withConf(Seq(eliding, spark), kv) {
+          val (ours, oursRows, _) = ordered(eliding, groupedOrdered(500))
+          assert(rangeShuffles(ours) == 1, s"$kv: range shuffle elided:\n${plan(ours)}")
+          assert(oursRows == ordered(spark, groupedOrdered(500))._2, s"$kv: answer differs")
+        }
+      }
+    }
+  }
+
+  test("with adaptive execution off a GROUP BY ... ORDER BY over a two-split file plans as in the rule-free session") {
+    withTwoSplits {
+      withConf(Seq(eliding, spark), "spark.sql.adaptive.enabled" -> "false") {
+        val ours = asShared(_.sql(groupedOrdered(7)))
+        assert(rangeShuffles(ours) == 1)
+        assert(normalized(ours) == normalized(spark.sql(groupedOrdered(7))))
+      }
+    }
+  }
+
   test("a sort-merge join of aggregated single-file inputs keeps its co-partitioning shuffles, also beside a two-file input") {
     val (bal, stock) = planes
     // Right sides: a single file, then two files; with partition
@@ -157,13 +217,14 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
     }
   }
 
+  private def normalized(df: DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
+      .replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+
   test("with adaptive execution off the plans are as in the rule-free session") {
     val (bal, stock) = planes
     Tables.registerAll(eliding, sfDir)
     Tables.registerAll(spark, sfDir)
-    def normalized(df: DataFrame): String =
-      df.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
-        .replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
     withConf(Seq(eliding, spark), "spark.sql.adaptive.enabled" -> "false") {
       (revenue +: planeReads(bal, stock).map(_._2)).foreach { q =>
         val ours = asShared(_.sql(q))

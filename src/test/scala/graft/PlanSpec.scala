@@ -458,4 +458,12 @@ class PlanSpec extends SparkSpec {
         s"multi-table near-dup must never go quadratic:\n$plan")
     }
   }
+
+  test("q99 frames built in two sessions on one context both read their own output") {
+    val q99 = graft.queries.Joins.all.find(_.name.startsWith("q99_")).get
+    val first = q99.fn(spark, sfDir)
+    val other = siblingSession(_ => ())
+    val second = q99.fn(other, sfDir).collect().map(_.toString).toSeq
+    assert(first.collect().map(_.toString).toSeq == second)
+  }
 }

@@ -39,4 +39,12 @@ class SkewJoinSpec extends SparkSpec {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("q119 frames built in two sessions on one context both read their own output") {
+    val q119 = graft.queries.Joins.all.find(_.name.startsWith("q119_")).get
+    val first = q119.fn(spark, sfDir)
+    val other = siblingSession(_ => ())
+    val second = q119.fn(other, sfDir).collect().map(_.toString).toSeq
+    assert(first.collect().map(_.toString).toSeq == second)
+  }
 }

@@ -93,4 +93,17 @@ class SourcesOpsSpec extends SparkSpec {
     assert(v1.getLong(4) == v1.getLong(1) && v1.getLong(3) == 0)
     assert(v2.getLong(3) == v2.getLong(1) && v2.getLong(4) == 0)
   }
+
+  // Each of these queries writes its result and returns a frame that reads
+  // it lazily: a second session's run must not replace what the first
+  // session's frame still reads.
+  Seq("q80", "q81", "q89").foreach { id =>
+    test(s"$id frames built in two sessions on one context both read their own output") {
+      val q = graft.queries.SourcesOps.all.find(_.name.startsWith(id + "_")).get
+      val first = q.fn(spark, sfDir)
+      val other = siblingSession(_ => ())
+      val second = q.fn(other, sfDir).collect().map(_.toString).toSeq
+      assert(first.collect().map(_.toString).toSeq == second)
+    }
+  }
 }
