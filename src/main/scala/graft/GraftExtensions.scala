@@ -41,6 +41,13 @@ import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBucket, JaccardS
   * row-group starts (read from the file's footer on the driver), so each
   * task reads an equal share of the rows and the tasks finish together.
   *
+  * And it installs [[graft.plans.ReuseBroadcasts]], a third query-stage
+  * preparation rule: a broadcast over file scans that an earlier command
+  * built from the same plan, the same files (path, length, modification
+  * time) and the same session settings is taken from a small per-context
+  * cache instead of being scanned, collected and broadcast again, so a
+  * repeated star join runs only its probe side's job.
+  *
   * And it installs [[graft.plans.FreshParquetDirWrites]], a planner
   * strategy: an unpartitioned, unbucketed parquet path write into a
   * directory that does not exist yet runs as one job that broadcasts the
@@ -61,6 +68,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => graft.plans.HoistLiterals)
     ext.injectQueryStagePrepRule(graft.plans.ElideSingleSplitShuffles(_))
     ext.injectQueryStagePrepRule(_ => graft.plans.RowGroupBalancedSplits)
+    ext.injectQueryStagePrepRule(graft.plans.ReuseBroadcasts(_))
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim", classOf[CosineSimilarity]),

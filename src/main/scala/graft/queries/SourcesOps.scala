@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -39,10 +39,14 @@ object SourcesOps extends QueryPack {
   /** A new directory per call under `java.io.tmpdir`, for a query that
     * writes its result and returns a frame reading it lazily: a later
     * call, in this session or another on the same context, must not
-    * overwrite what an earlier frame still reads.
+    * overwrite what an earlier frame still reads. The frame may read it
+    * until the JVM exits, so it is deleted then, by Spark's shutdown hook.
     */
-  private[graft] def freshScratch(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_${name}_").resolve("out").toString
+  private[graft] def freshScratch(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
+    GraftBridge.registerShutdownDeleteDir(dir.toFile)
+    dir.resolve("out").toString
+  }
 
   private[graft] def sanitizedAppId(spark: SparkSession): String =
     spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
@@ -123,7 +127,7 @@ object SourcesOps extends QueryPack {
     * directory level), aggregate per nation.
     */
   def partitionedSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "psink")
+    val out = freshScratch("srcops_psink")
     Tables.customer(spark, dir)
       .write.mode(SaveMode.Overwrite).partitionBy("c_mktsegment").parquet(out)
     spark.read.parquet(out)
@@ -222,7 +226,7 @@ object SourcesOps extends QueryPack {
     * partition count.
     */
   def dynamicPartitionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "dpp")
+    val out = freshScratch("srcops_dpp")
     Tables.customer(spark, dir)
       .write.mode(SaveMode.Overwrite).partitionBy("c_nationkey").parquet(out)
     val fact = spark.read.parquet(out)
@@ -313,7 +317,7 @@ object SourcesOps extends QueryPack {
   }
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, "buck_result")
+    val out = freshScratch("srcops_buck_result")
     val conf = spark.conf
     val overrides = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import java.io.File
 import java.util.Date
 
 import org.apache.spark.internal.io.{FileCommitProtocol, SparkHadoopWriterUtils}
@@ -8,12 +9,15 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BaseOrdering, RowOr
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobDescription, WriteTaskResult}
 import org.apache.spark.sql.util.SchemaUtils
+import org.apache.spark.util.ShutdownHookManager
 
 /** Minimal bridge into the `private[sql]`/`private[spark]` surface graft's
   * custom operators need: constructing a DataFrame from a custom logical
   * plan and building a row ordering from SortOrder
-  * (graft.plans.TopKPerGroup), and Spark's one-task file writer with the
-  * checks and ids around it (graft.plans.FreshParquetDirWrites). This is
+  * (graft.plans.TopKPerGroup), Spark's one-task file writer with the
+  * checks and ids around it (graft.plans.FreshParquetDirWrites), and
+  * Spark's registry of directories deleted at JVM exit
+  * (graft.queries.SourcesOps.freshScratch). This is
   * the standard extension-library pattern (same technique as Sedona /
   * Delta et al.) — forwarders only.
   */
@@ -40,4 +44,6 @@ object GraftBridge {
 
   def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
     SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
+
+  def registerShutdownDeleteDir(dir: File): Unit = ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS, REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec, ShuffleOrigin}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
-import graft.plans.ElideSingleSplitShuffles
+import graft.plans.{CachedBroadcastExec, ElideSingleSplitShuffles}
 import graft.queries.{Aggregates, Joins, Relational, Scalars, SqlGateway, Temporal, Windows}
 import graft.sources.Tables
 
@@ -64,8 +64,16 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
     "join" -> (s"SELECT count(*) AS n, sum(b.v + s.v) AS s FROM parquet.`$bal` b " +
       s"JOIN parquet.`$stock` s ON b.k = s.k WHERE b.k % 7 = 3"))
 
+  /** The broadcast exchanges left in `df`'s executed plan: the broadcasts
+    * that ran a job. */
+  private def broadcasts(df: DataFrame): Int = collect(plan(df)) { case b: BroadcastExchangeExec => b }.size
+
+  /** The broadcasts `df` took from `ReuseBroadcasts`' cache, without a job. */
+  private def cachedBroadcasts(df: DataFrame): Int = collect(plan(df)) { case c: CachedBroadcastExec => c }.size
+
   /** `sql` run through the gateway in `ext` after one warm-up run: the
-    * executed frame and the jobs it ran. */
+    * executed frame and the jobs it ran. In `ext` the warm-up run records
+    * the broadcasts, which the measured run then takes from the cache. */
   private def measured(sql: String): (DataFrame, Int) = {
     SqlGateway.sql(ext, sfDir, sql).collect()
     var df: DataFrame = null
@@ -80,7 +88,8 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
       val (df, jobs) = measured(sql)
       assert(shuffles(df).isEmpty, s"$kind read kept a shuffle:\n${plan(df)}")
       assert(collect(plan(df)) { case c: CoalesceExec => c }.nonEmpty, s"$kind read: no coalesce")
-      assert(jobs == expected(kind), s"$kind read ran $jobs jobs")
+      assert(jobs == 1 + broadcasts(df), s"$kind read ran $jobs jobs for ${broadcasts(df)} broadcasts")
+      assert(jobs + cachedBroadcasts(df) == expected(kind), s"$kind read ran $jobs jobs")
       assert(rows(df) == rows(spark.sql(sql)), s"$kind read answers differently")
     }
   }
@@ -95,8 +104,8 @@ class ElideSingleSplitShufflesSpec extends SparkSpec with AdaptiveSparkPlanHelpe
     Tables.registerAll(spark, sfDir)
     val (df, jobs) = measured(revenue)
     assert(shuffles(df).isEmpty, s"revenue read kept a shuffle:\n${plan(df)}")
-    val broadcasts = collect(plan(df)) { case b: BroadcastExchangeExec => b }.size
-    assert(broadcasts == 2 && jobs == broadcasts + 1, s"$jobs jobs for $broadcasts broadcasts")
+    assert(broadcasts(df) + cachedBroadcasts(df) == 2 && jobs == broadcasts(df) + 1,
+      s"$jobs jobs for ${broadcasts(df)} broadcasts:\n${plan(df)}")
     assert(df.collect().map(_.toString).toSeq == spark.sql(revenue).collect().map(_.toString).toSeq)
   }
 

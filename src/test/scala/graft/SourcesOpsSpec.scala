@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ShutdownDeleteDirs
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.queries.SourcesOps
@@ -18,10 +20,12 @@ class SourcesOpsSpec extends SparkSpec {
   }
 
   test("partitioned sink lays out one directory per mktsegment and prunes reads") {
-    SourcesOps.partitionedSink(spark, sfDir).collect() // triggers the write
-    val out = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_srcops_psink_${SourcesOps.sanitizedAppId(spark)}")
+    val sink = SourcesOps.partitionedSink(spark, sfDir)
+    sink.collect()
+    // The directory the frame reads: a new one per call.
+    val out = new java.io.File(sink.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.head.toUri
+    }.get)
     val segDirs = out.listFiles().filter(_.getName.startsWith("c_mktsegment="))
     assert(segDirs.length >= 2, s"expected partition dirs, got ${out.listFiles().map(_.getName).mkString(",")}")
     // Pruned read: the physical plan must select partitions, not filter rows.
@@ -51,8 +55,7 @@ class SourcesOpsSpec extends SparkSpec {
       case q: QueryStageExec => scans(q.plan)
       case f: FileSourceScanExec => Seq(f)
     }.flatten
-    val factScan = scans(finalPlan)
-      .find(_.metadata("Location").contains("graft_srcops_dpp"))
+    val factScan = scans(finalPlan).find(_.relation.partitionSchema.nonEmpty)
     assert(factScan.isDefined, s"fact FileSourceScanExec not found:\n$finalPlan")
     val partsRead = factScan.get.metrics.get("numPartitions").map(_.value)
     assert(partsRead.contains(5L),
@@ -97,7 +100,7 @@ class SourcesOpsSpec extends SparkSpec {
   // Each of these queries writes its result and returns a frame that reads
   // it lazily: a second session's run must not replace what the first
   // session's frame still reads.
-  Seq("q80", "q81", "q89").foreach { id =>
+  Seq("q80", "q81", "q82", "q89", "q98", "q102").foreach { id =>
     test(s"$id frames built in two sessions on one context both read their own output") {
       val q = graft.queries.SourcesOps.all.find(_.name.startsWith(id + "_")).get
       val first = q.fn(spark, sfDir)
@@ -105,5 +108,12 @@ class SourcesOpsSpec extends SparkSpec {
       val second = q.fn(other, sfDir).collect().map(_.toString).toSeq
       assert(first.collect().map(_.toString).toSeq == second)
     }
+  }
+
+  test("each directory from freshScratch is deleted at JVM exit, since its frames read it until then") {
+    val fresh = new java.io.File(SourcesOps.freshScratch("srcops_exit")).getParentFile
+    assert(fresh.isDirectory && ShutdownDeleteDirs.registered(fresh), s"$fresh is not registered")
+    val other = java.nio.file.Files.createTempDirectory("graft_srcops_unregistered").toFile
+    try assert(!ShutdownDeleteDirs.registered(other)) finally other.delete()
   }
 }
